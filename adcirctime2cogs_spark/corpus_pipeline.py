@@ -41,6 +41,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
+
 # stage order is part of the contract: quality halves the fuzzy
 # stage's shingle volume, dedup precedes decontamination so dropped
 # twins never mask a contaminated keeper, and the cap runs last so it
@@ -213,15 +215,6 @@ def _lang_filter(spark: SparkSession, stage_in_dir: str) -> DataFrame:
         .select("doc_id")
     )
     return _read_stage(spark, stage_in_dir).join(keep, "doc_id", "semi")
-
-
-def _evict_lang_filter_artifacts(spark: SparkSession, stage_dir: str) -> None:
-    """Drop the persisted NB model tables for a transient stage dir
-    once its checkpoint is written (the _fuzzy_dedup eviction
-    discipline)."""
-    from adcirctime2cogs_spark.operators.textstats import evict_nb_artifacts
-
-    evict_nb_artifacts(spark, stage_dir)
 
 
 def _fuzzy_dedup(spark: SparkSession, stage_in_dir: str) -> DataFrame:
@@ -596,8 +589,11 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> dict:
             out = fn(docs)
         stage_dir = os.path.join(work_dir, f"{i:02d}_{stage}")
         n = _write_stage(out, stage_dir)
-        if stage == "lang_filter":
-            _evict_lang_filter_artifacts(spark, cur_dir)
+        # the stage kernels memoize persisted artifacts (shingles, NB
+        # model tables) keyed on the stage's input dir; every run
+        # checkpoints under a fresh work_dir, so no later call can hit
+        # them — release them now that the checkpoint is written
+        memo.clear(spark, cur_dir)
         if stage == "semdedup":
             # the keeper plan has executed (stage output is on disk);
             # this run's cell-index layouts are addressable by no
@@ -605,16 +601,6 @@ def run_corpus_pipeline(spark: SparkSession, cfg: dict) -> dict:
             from adcirctime2cogs_spark.tables import drop_layouts
 
             drop_layouts(spark, sem_dir)
-        if stage == "fuzzy_dedup":
-            # the dedup kernels memoize persisted shingle artifacts
-            # keyed on the stage dir; every run checkpoints under a
-            # fresh work_dir, so without an explicit evict each run
-            # would pin its exploded shingle table for the session
-            from adcirctime2cogs_spark.operators.dedup import (
-                evict_shingle_artifacts,
-            )
-
-            evict_shingle_artifacts(spark, cur_dir)
         if n > prev_rows:
             # every stage filters or rewrites 1:1 — growth means a
             # join fanned out (a bug), never valid pipeline output

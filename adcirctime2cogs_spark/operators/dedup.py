@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
 from adcirctime2cogs_spark.functions.numeric import r4
 
 from adcirctime2cogs_spark.functions.text import (
@@ -118,37 +119,6 @@ WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
 )
 
 
-_ARTIFACT_MEMO: dict = {}
-# per-memo-key derived cached DataFrames, evicted with their parents
-_DERIVED_CACHES: dict = {}
-
-
-def _register_derived_cache(spark, sf_dir: str, df):
-    """Persist a DataFrame derived from the shingle artifacts and tie
-    its cache lifetime to the memo entry (see eviction above). Repeat
-    registrations of a semantically identical plan return the FIRST
-    persisted handle instead of appending another (review r11: direct
-    operator calls that bypass the registry's plan cache — the test
-    suite, notebooks — accumulated one persisted duplicate per call).
-    With no live artifact entry to tie the lifetime to, the frame is
-    returned UNPERSISTED (an untracked persist would leak executor
-    storage for the session's lifetime)."""
-    app = spark.sparkContext.applicationId
-    for k in _ARTIFACT_MEMO:
-        if k[0] == app and k[1] == sf_dir:
-            lst = _DERIVED_CACHES.setdefault(k, [])
-            try:
-                h = df.semanticHash()
-                for prev in lst:
-                    if prev.semanticHash() == h:
-                        return prev
-            except Exception:
-                pass  # hash unavailable: fall through, still tracked
-            lst.append(df.persist())
-            return df
-    return df
-
-
 def _shingle_artifacts(spark: SparkSession, sf_dir: str):
     """The fuzzy-dedup family's shared intermediates: the shingle
     explode `sh`, the stop-shingle set `stop` (doc frequency > DF_CAP),
@@ -166,41 +136,14 @@ def _shingle_artifacts(spark: SparkSession, sf_dir: str):
     fuzzy-dedup oracle via _INTER_SQL. `sh` and `inter` are persisted:
     exact-Jaccard pairs, LSH verify, and the clustering query all read
     them, and at 100 TB they are the written-once tables between
-    pipeline stages.
+    pipeline stages. Stored in the session memo under sf_dir, so
+    repeated calls reuse the SAME cached DataFrames.
     """
-    # keyed on the documents file's mtime too (mirroring tables.py's
-    # footer-probe cache): an in-place fixture regeneration must not
-    # be served stale persisted shingles. A superseded entry for the
-    # same (session, sf_dir) is unpersisted and dropped.
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        mtime = -1.0
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
+    return memo.get(spark, "dedup.shingle_artifacts", sf_dir,
+                    lambda: _build_shingle_artifacts(spark, sf_dir))
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, mtime)
-    memo = _ARTIFACT_MEMO.get(key)
-    if memo is not None and memo[0] is spark:
-        return memo[1], memo[2], memo[3]
-    # drop entries (and their derived caches) recorded by other
-    # applications — dead-session JVM state died with the app, only
-    # the Python references leak without this (review r11)
-    for k in list(_ARTIFACT_MEMO):
-        kid = k[0] if isinstance(k, tuple) else k
-        if kid != app:
-            _ARTIFACT_MEMO.pop(k, None)
-            _DERIVED_CACHES.pop(k, None)
-    for old_key in [k for k in _ARTIFACT_MEMO if k[:2] == key[:2]]:
-        old = _ARTIFACT_MEMO.pop(old_key)
-        for df in old[1:]:
-            df.unpersist()
-        # DERIVED persists (sig_sizes, component edges) cache plans
-        # built over the old artifacts; Spark's CacheManager would
-        # dedupe a rebuilt identical plan onto the stale entry, so
-        # they must be evicted together with their parents
-        for df in _DERIVED_CACHES.pop(old_key, []):
-            df.unpersist()
+
+def _build_shingle_artifacts(spark: SparkSession, sf_dir: str):
     # spread the under-split scan BEFORE the explode (optimization
     # r12): the fixture documents table is one row group, so the
     # shingle split + per-shingle md5 — the fuzzy-dedup family's
@@ -234,33 +177,7 @@ def _shingle_artifacts(spark: SparkSession, sf_dir: str):
         .agg(F.count("*").alias("c"))
         .persist()
     )
-    # memoized per (session, sf_dir): repeated calls (bench loops, the
-    # oracle sweep, multi-query pipelines) must reuse the SAME cached
-    # DataFrames instead of re-persisting equivalent plans — the
-    # CacheManager would dedupe by plan anyway, but each re-persist
-    # call logs a warning and re-walks the plan. Keyed on the live
-    # session object so a restarted session rebuilds cleanly.
-    _ARTIFACT_MEMO[key] = (spark, sh, stop, inter)
     return sh, stop, inter
-
-
-def evict_shingle_artifacts(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist and drop the memoized shingle artifacts (and any
-    derived caches) for one (session, dir). The automatic eviction in
-    _shingle_artifacts only fires when the SAME dir is requested again
-    with a newer mtime — callers that key on ephemeral directories
-    (corpus_pipeline checkpoints a fresh work_dir per run) must evict
-    explicitly once the stage materializes, or each run pins its full
-    exploded shingle table in executor storage for the session's
-    lifetime."""
-    for key in [
-        k for k in _ARTIFACT_MEMO if k[0] == id(spark) and k[1] == sf_dir
-    ]:
-        old = _ARTIFACT_MEMO.pop(key)
-        for df in old[1:]:
-            df.unpersist()
-        for df in _DERIVED_CACHES.pop(key, []):
-            df.unpersist()
 
 
 def _doc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,16 +185,17 @@ def _doc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominators (_SIZES_SQL). A shared derived artifact (optimization
     r12): the ngram/prefix verify paths recompute it per execution,
     and with the shingle build now spread across cores the recompute
-    became task-dispatch-bound; one row per doc persists through
-    _register_derived_cache under the artifact memo's lifetime, same
-    as LSH's sig_sizes (which already carries its own n)."""
+    became task-dispatch-bound; one row per doc persists in the
+    session memo beside the shingle artifacts, same as LSH's sig_sizes
+    (which already carries its own n)."""
     sh, stop, _ = _shingle_artifacts(spark, sf_dir)
-    sizes = (
-        sh.join(F.broadcast(stop), "sh", "left_anti")
+    return memo.get(
+        spark, "dedup.doc_sizes", sf_dir,
+        lambda: sh.join(F.broadcast(stop), "sh", "left_anti")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
+        .persist(),
     )
-    return _register_derived_cache(spark, sf_dir, sizes)
 
 
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -716,12 +634,13 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidates), while n counts only non-stop shingles so the exact
     # verify denominators match the capped intersection (_SIZES_SQL).
     stop_marked = stop.withColumn("is_stop", F.lit(True))
-    sig_sizes = (
-        sh.join(F.broadcast(stop_marked), "sh", "left")
+    sig_sizes = memo.get(
+        spark, "dedup.lsh_sig_sizes", sf_dir,
+        lambda: sh.join(F.broadcast(stop_marked), "sh", "left")
         .groupBy("doc_id")
         .agg(*aggs, F.count(F.when(F.col("is_stop").isNull(), 1)).alias("n"))
+        .persist(),
     )
-    sig_sizes = _register_derived_cache(spark, sf_dir, sig_sizes)
     # The Jaccard denominators (na, nb) RIDE the candidate pipeline
     # (optimization r13): the previous plan attached them through two
     # post-count sort-merge joins against sig_sizes — two exchanges +
@@ -940,14 +859,13 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     action per round, no full-frame comparison).
     """
     pairs = _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = _register_derived_cache(
-        spark,
-        sf_dir,
-        pairs.union(
+    edges = memo.get(
+        spark, "dedup.component_edges", sf_dir,
+        lambda: pairs.union(
             pairs.select(
                 F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
             )
-        ),
+        ).persist(),
     )
     labels = (
         edges.select(F.col("doc_a").alias("node")).distinct()
@@ -1773,42 +1691,22 @@ MH_INC_VER = "inc-v3"  # v3: hashes/ is md5(normalized_text) — the
 # 64-bit, silently merges unrelated docs near ~5e9 documents by
 # birthday collision)
 
-# (application id, base_dir) -> (documents mtime, layout path): lets
-# a session keep serving increments after the base text moved to cold
-# storage (layout_once needs the text to re-derive the version key;
-# the resolved path doesn't). Keyed on applicationId, NOT id(spark):
-# CPython can reuse a garbage-collected session's id, which would let
-# the cold-storage fallback (the OSError path, where the mtime check
-# is skipped) serve a stale path recorded by a dead session
-# (ADVICE r09).
-_INC_LAYOUT_MEMO: dict = {}
-
 
 def _minhash_base_layout(spark: SparkSession, base_dir: str) -> str:
     """Materialize the base corpus's incremental-dedup artifacts once
     per (base_dir, data version): bands/, shingles/ (stop-filtered),
     sizes/, stop/ under one atomically-published layout dir. The
-    resolved path is memoized per (applicationId, base_dir, text
-    mtime); if
-    the base text is gone (cold storage), the memoized path keeps
-    serving — a fresh session then needs the recorded layout path
+    resolved path is stored in the session memo under base_dir; if the
+    base text is gone (cold storage), the memo keeps serving it — a
+    fresh session then needs the recorded layout path
     (dedup_incremental_pairs' base_layout parameter, the catalog
     contract)."""
-    from adcirctime2cogs_spark.tables import layout_once
+    return memo.get(spark, "dedup.mh_incremental_layout", base_dir,
+                    lambda: _build_minhash_base_layout(spark, base_dir))
 
-    key = (spark.sparkContext.applicationId, base_dir)
-    try:
-        mtime = os.path.getmtime(
-            os.path.join(base_dir, "documents.parquet")
-        )
-    except OSError:
-        hit = _INC_LAYOUT_MEMO.get(key)
-        if hit is not None:
-            return hit[1]
-        raise
-    hit = _INC_LAYOUT_MEMO.get(key)
-    if hit is not None and hit[0] == mtime:
-        return hit[1]
+
+def _build_minhash_base_layout(spark: SparkSession, base_dir: str) -> str:
+    from adcirctime2cogs_spark.tables import layout_once
 
     def build(tmp: str) -> None:
         docs = load_table(spark, base_dir, "documents")
@@ -1836,14 +1734,9 @@ def _minhash_base_layout(spark: SparkSession, base_dir: str) -> str:
         ).write.parquet(f"{tmp}/hashes")
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    path = layout_once(
+    return layout_once(
         spark, base_dir, "mh_incremental", build, code_ver=MH_INC_VER
     )
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
-
-    evict_foreign_app_entries(_INC_LAYOUT_MEMO, key[0])
-    _INC_LAYOUT_MEMO[key] = (mtime, path)
-    return path
 
 
 def dedup_incremental_exact(spark: SparkSession, base_dir: str,

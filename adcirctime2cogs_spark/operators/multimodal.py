@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
 from adcirctime2cogs_spark.tables import load_table
 
 QUERIES = {}
@@ -75,60 +76,24 @@ def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ids
 
 
-_FP_MEMO: dict = {}
-
-
 def _fingerprints_once(spark: SparkSession, sf_dir: str, kind: str,
                        build) -> DataFrame:
     """Per-(application, sf_dir, data version) persisted media
-    FINGERPRINT table (optimization r12) — the guide-§8 'decision
-    pass' artifact: the pure-Python synth/decode/hash pass over the
-    media corpus is the near-dup queries' dominant cost, and their
-    MIH band joins reference the fingerprint frame 2x (image/audio:
-    probe + build side) to 4x (video: + both verify sides), which
-    re-executed the whole codec pipeline per reference. Hashing once
-    and joining on the 8-byte-per-row result is exactly the
-    fingerprint-table materialization the optimization guide's worked
-    example prescribes; at 100 TB this table is what a production
-    pipeline writes between stages. Memo discipline mirrors
-    dedup._shingle_artifacts: keyed on the documents fixture's mtime
-    (regenerated data rebuilds), foreign-application entries evicted,
-    superseded entries unpersisted. The FIRST action per data version
-    still pays the full codec build (bench's cold column keeps the
-    honest construction cost)."""
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        mtime = -1.0
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, kind, mtime)
-    memo = _FP_MEMO.get(key)
-    if memo is not None and memo[0] is spark:
-        return memo[1]
-    for k in list(_FP_MEMO):
-        if k[0] != app:
-            _FP_MEMO.pop(k, None)
-    for old_key in [k for k in _FP_MEMO if k[:3] == key[:3]]:
-        _FP_MEMO.pop(old_key)[1].unpersist()
-    df = build().persist()
-    _FP_MEMO[key] = (spark, df)
-    return df
-
-
-def evict_fingerprints(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist and drop the memoized fingerprint tables for one
-    (application, sf_dir) — the explicit-eviction API mirroring
-    dedup.evict_shingle_artifacts (ADVICE r12): the automatic
-    supersession in _fingerprints_once only fires when the SAME dir is
-    requested again with a newer mtime, so sessions that fingerprint
-    ephemeral/one-off corpora (scale legs, tempdir fixtures) must
-    evict once done or the persisted tables pin executor storage for
-    the application's lifetime."""
-    app = spark.sparkContext.applicationId
-    for key in [
-        k for k in _FP_MEMO if k[0] == app and k[1] == sf_dir
-    ]:
-        _FP_MEMO.pop(key)[1].unpersist()
+    FINGERPRINT table (optimization r12), stored in the session memo —
+    the guide-§8 'decision pass' artifact: the pure-Python
+    synth/decode/hash pass over the media corpus is the near-dup
+    queries' dominant cost, and their MIH band joins reference the
+    fingerprint frame 2x (image/audio: probe + build side) to 4x
+    (video: + both verify sides), which re-executed the whole codec
+    pipeline per reference. Hashing once and joining on the
+    8-byte-per-row result is exactly the fingerprint-table
+    materialization the optimization guide's worked example
+    prescribes; at 100 TB this table is what a production pipeline
+    writes between stages. The FIRST action per data version still
+    pays the full codec build (bench's cold column keeps the honest
+    construction cost)."""
+    return memo.get(spark, f"multimodal.fingerprints:{kind}", sf_dir,
+                    lambda: build().persist())
 
 
 def binary_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

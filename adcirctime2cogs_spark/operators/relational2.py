@@ -1029,7 +1029,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import shutil
 
-    from adcirctime2cogs_spark.registry import _data_version
+    from adcirctime2cogs_spark.memo import data_version
     from adcirctime2cogs_spark.tables import _src_hash
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
@@ -1039,7 +1039,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonical source-dir tag (review r11: an inlined md5 here would
     # diverge from warehouse naming if _src_hash ever normalized paths)
     src = _src_hash(sf_dir)
-    ver = hashlib.md5(str(_data_version(sf_dir)).encode()).hexdigest()[:8]
+    ver = hashlib.md5(str(data_version(sf_dir)).encode()).hexdigest()[:8]
     app = hashlib.md5(
         spark.sparkContext.applicationId.encode()
     ).hexdigest()[:6]

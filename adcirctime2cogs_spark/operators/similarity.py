@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
 from adcirctime2cogs_spark.functions.numeric import r4, rn
 
 from adcirctime2cogs_spark.tables import load_table
@@ -1327,7 +1328,6 @@ KM_ITERS = 3   # fixed Lloyd iterations (deterministic, no convergence RNG)
 KM_DIM = EMB_DIM  # oracle dimensionality rides the single source
 # (review r11: a hand-duplicated 64 would silently NULL-pad the
 # oracle's per-dim distance terms if the fixture changed dimension)
-_KMEANS_MEMO: dict = {}  # (applicationId, sf_dir, mtime) -> centroids
 
 
 def _kmeans_oracle_sql() -> str:
@@ -1422,45 +1422,38 @@ def vec_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns the final assignment (vec_id, cluster, dist) computed
     lazily — per-iteration driver traffic is k×dim rows, never the
-    corpus. The trained centroids are memoized per (session, sf_dir)
-    so registry-wide plan sweeps (plan_audit, the cartesian gate) and
-    repeat invocations pay the iteration jobs once, like the shingle
-    artifacts in dedup.py. tests/test_similarity.py pins numpy
+    corpus. The trained centroids are kept in the session memo per
+    (application, sf_dir, data version) so registry-wide plan sweeps
+    (plan_audit, the cartesian gate) and repeat invocations pay the
+    iteration jobs once. tests/test_similarity.py pins numpy
     equivalence."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # mtime in the key: an in-place embeddings regeneration must not
-    # be served centroids trained on the old vectors
-    try:
-        _mt = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
-    except OSError:
-        _mt = -1.0
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
+    cents = memo.get(spark, "similarity.kmeans_centroids", sf_dir,
+                     lambda: _lloyd_centroids(emb))
+    return _km_assign(emb, cents).select(
+        "vec_id", "cluster", r4(F.col("dist")).alias("dist")
+    )
 
-    _app = spark.sparkContext.applicationId
-    _key = (_app, sf_dir, _mt)
-    # bound the memo: a regenerated fixture (new mtime) supersedes the
-    # old centroids, and entries recorded by OTHER applications are
-    # dropped too — a session-cycling driver would otherwise pin dead
-    # SparkSession refs forever (review r11)
-    evict_foreign_app_entries(_KMEANS_MEMO, _app)
-    for old_key in [k for k in _KMEANS_MEMO if k[:2] == _key[:2] and k != _key]:
-        _KMEANS_MEMO.pop(old_key)
-    memo = _KMEANS_MEMO.get(_key)
-    if memo is not None and memo[0] is spark:
-        cents = memo[1]
-        dists = F.array(
-            *[_sqdist(F.col("embedding"), F.array(*[F.lit(x) for x in cents[i]]))
-              for i in range(KM_K)]
-        )
-        return emb.select(
-            "vec_id",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias("cluster"),
-            r4(F.array_min(dists)).alias("dist"),
-        )
+
+def _km_assign(df: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
+    """(vec_id, embedding, cluster, dist): the row-local argmin over
+    KM_K squared-L2 distances to literal centroids."""
+    dists = F.array(
+        *[_sqdist(F.col("embedding"), F.array(*[F.lit(x) for x in cents[i]]))
+          for i in range(KM_K)]
+    )
+    return df.select(
+        "vec_id",
+        "embedding",
+        (F.array_position(dists, F.array_min(dists)) - 1)
+        .cast("int")
+        .alias("cluster"),
+        F.array_min(dists).alias("dist"),
+    )
+
+
+def _lloyd_centroids(emb: DataFrame) -> dict[int, list[float]]:
+    """KM_ITERS Lloyd rounds from the KM_K lowest vec_ids."""
     # the KM_K LOWEST ids, not `vec_id < KM_K`: identical on the
     # dense-id fixture, but also correct on sparse-id tables (the
     # same convention as _pq_anchors; review r11 — the filter form
@@ -1474,25 +1467,9 @@ def vec_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         i: [float(x) for x in row.embedding] for i, row in enumerate(init)
     }
 
-    def lit_cent(c: list[float]) -> Column:
-        return F.array(*[F.lit(x) for x in c])
-
-    def assign(df):
-        dists = F.array(
-            *[_sqdist(F.col("embedding"), lit_cent(cents[i])) for i in range(KM_K)]
-        )
-        return df.select(
-            "vec_id",
-            "embedding",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias("cluster"),
-            F.array_min(dists).alias("dist"),
-        )
-
     for _ in range(KM_ITERS):
         means = (
-            assign(emb)
+            _km_assign(emb, cents)
             .select("cluster", F.posexplode("embedding").alias("dim", "v"))
             .groupBy("cluster", "dim")
             .agg(F.avg(F.col("v").cast("double")).alias("m"))
@@ -1502,16 +1479,13 @@ def vec_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in means:
             new.setdefault(r.cluster, [0.0] * len(cents[0]))[r.dim] = r.m
         cents = {i: new.get(i, cents[i]) for i in range(KM_K)}
-
-    _KMEANS_MEMO[_key] = (spark, cents)
-    return assign(emb).select("vec_id", "cluster", r4(F.col("dist")).alias("dist"))
+    return cents
 
 
 # ----------------------------------------------- product quantization
 PQ_M = 4          # subspaces
 PQ_SUB = EMB_DIM // PQ_M  # dims per subspace (16)
 PQ_K = 16         # centroids per subspace -> 4-bit codes, 64x smaller
-_PQ_ANCHOR_MEMO: dict = {}  # (applicationId, sf_dir, mtime) -> codebook
 
 
 def _pq_sub_terms(emb: str, cent: str, m: int) -> str:
@@ -1566,25 +1540,14 @@ def _pq_encode_sql() -> str:
 
 def _pq_anchors(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The PQ_K lowest vec_ids' embeddings — the deterministic
-    codebook. Memoized per (session, sf_dir, fixture mtime) so the
-    encode query and the ADC scan don't each pay a collect job per
-    plan construction (same pattern as _KMEANS_MEMO)."""
-    import os
+    codebook, stored in the session memo under sf_dir so the encode
+    query and the ADC scan don't each pay a collect job per plan
+    construction."""
+    return memo.get(spark, "similarity.pq_anchors", sf_dir,
+                    lambda: _build_pq_anchors(spark, sf_dir))
 
-    try:
-        _mt = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
-    except OSError:
-        _mt = -1.0
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _mt)
-    evict_foreign_app_entries(_PQ_ANCHOR_MEMO, app)  # review r11
-    for old in [k for k in _PQ_ANCHOR_MEMO if k[:2] == key[:2] and k != key]:
-        _PQ_ANCHOR_MEMO.pop(old)
-    memo = _PQ_ANCHOR_MEMO.get(key)
-    if memo is not None and memo[0] is spark:
-        return memo[1]
+def _build_pq_anchors(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     emb = load_table(spark, sf_dir, "embeddings")
     # the PQ_K LOWEST ids, not `vec_id < PQ_K`: identical on the
     # dense-id fixture the oracle states (`WHERE vec_id < 16`), but
@@ -1601,7 +1564,6 @@ def _pq_anchors(spark: SparkSession, sf_dir: str) -> list[list[float]]:
         raise ValueError(
             f"PQ codebook needs >= {PQ_K} embeddings, got {len(anchors)}"
         )
-    _PQ_ANCHOR_MEMO[key] = (spark, anchors)
     return anchors
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
 from adcirctime2cogs_spark.functions.numeric import r4
 
 from adcirctime2cogs_spark.functions.text import normalized_text, tokens_col
@@ -855,36 +856,17 @@ def java_ws_tokens(text: str) -> list[str]:
     return [w for w in _JAVA_WS.split(t) if w]
 
 
-_BPE_MERGE_MEMO: dict = {}  # (applicationId, sf_dir, mtime) -> rank table
-
-
 def bpe_merge_ranks(spark: SparkSession, sf_dir: str) -> dict:
-    """{(left, right): rank} from text_bpe_train, memoized per
-    (application, sf_dir, fixture mtime) — training is BPE_MERGES
-    iterative Spark rounds, far too heavy to re-run on every plan
-    construction (same memo pattern as similarity._KMEANS_MEMO)."""
-    import os
-
-    try:
-        _mt = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        _mt = -1.0
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _mt)
-    evict_foreign_app_entries(_BPE_MERGE_MEMO, app)  # review r11
-    for old in [k for k in _BPE_MERGE_MEMO if k[:2] == key[:2] and k != key]:
-        _BPE_MERGE_MEMO.pop(old)
-    memo = _BPE_MERGE_MEMO.get(key)
-    if memo is not None and memo[0] is spark:
-        return memo[1]
-    ranks = {
-        (r.left, r.right): r.rank
-        for r in text_bpe_train(spark, sf_dir).collect()
-    }
-    _BPE_MERGE_MEMO[key] = (spark, ranks)
-    return ranks
+    """{(left, right): rank} from text_bpe_train, stored in the session
+    memo under sf_dir — training is BPE_MERGES iterative Spark rounds,
+    far too heavy to re-run on every plan construction."""
+    return memo.get(
+        spark, "textstats.bpe_merge_ranks", sf_dir,
+        lambda: {
+            (r.left, r.right): r.rank
+            for r in text_bpe_train(spark, sf_dir).collect()
+        },
+    )
 
 
 @_register("text_bpe_encode")  # rows-only like text_bpe_train: the
@@ -1016,43 +998,22 @@ FROM ranked WHERE rn = 1
 """
 
 
-_NB_MODEL_MEMO: dict = {}  # (applicationId, sf_dir, mtime) -> (counts, ndoc)
-
-
 def _nb_model_artifacts(spark: SparkSession, sf_dir: str):
     """The NB classifier's shared intermediates, persisted once per
-    (session, corpus, data version): `counts` — the fitted model's
-    (lang, tok, c) table — and `ndoc` — the per-doc (doc_id,
-    labeled_lang, n_toks) frame. Without them the declarative plan
-    re-scans the corpus seven times (counts feeds vocab-size, class
-    totals AND the scoring join; ndoc feeds priors, the total-doc
-    count AND the score assembly — Catalyst duplicates each subtree);
-    with them, training + scoring touch the corpus exactly three
-    times: counts build, scoring join, per-doc projection. Same memo
-    + eviction discipline as dedup's _shingle_artifacts (keyed on the
-    documents file's mtime; superseded entries unpersisted)."""
-    import os
+    (application, corpus, data version) in the session memo: `counts`
+    — the fitted model's (lang, tok, c) table — and `ndoc` — the
+    per-doc (doc_id, labeled_lang, n_toks) frame. Without them the
+    declarative plan re-scans the corpus seven times (counts feeds
+    vocab-size, class totals AND the scoring join; ndoc feeds priors,
+    the total-doc count AND the score assembly — Catalyst duplicates
+    each subtree); with them, training + scoring touch the corpus
+    exactly three times: counts build, scoring join, per-doc
+    projection."""
+    return memo.get(spark, "textstats.nb_model", sf_dir,
+                    lambda: _build_nb_model_artifacts(spark, sf_dir))
 
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        mtime = -1.0
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, mtime)
-    memo = _NB_MODEL_MEMO.get(key)
-    # belt: verify the memoized entry really belongs to THIS live
-    # session object, not just this applicationId
-    if memo is not None and memo[0] is spark:
-        return memo[1], memo[2]
-    # foreign-application entries hold persisted DataFrames of dead
-    # sessions — dropping the references is enough (their JVM state
-    # died with the session; review r11)
-    evict_foreign_app_entries(_NB_MODEL_MEMO, app)
-    for old_key in [k for k in _NB_MODEL_MEMO if k[:2] == key[:2]]:
-        for df in _NB_MODEL_MEMO.pop(old_key)[1:]:
-            df.unpersist()
+def _build_nb_model_artifacts(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang",
@@ -1074,20 +1035,7 @@ def _nb_model_artifacts(spark: SparkSession, sf_dir: str):
             ),
         ).alias("n_toks"),
     ).persist()
-    _NB_MODEL_MEMO[key] = (spark, counts, ndoc)
     return counts, ndoc
-
-
-def evict_nb_artifacts(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist the memoized NB model tables for a corpus dir —
-    pipeline stages that classify a transient stage directory call
-    this so per-run model tables don't pin cluster memory for the
-    session."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _NB_MODEL_MEMO
-                if k[0] == app and k[1] == sf_dir]:
-        for df in _NB_MODEL_MEMO.pop(key)[1:]:
-            df.unpersist()
 
 
 @_register("text_nb_classify", _NB_SQL)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
 from adcirctime2cogs_spark.functions.numeric import r4
 
 from adcirctime2cogs_spark.plans import micromesh as mm
@@ -66,29 +67,17 @@ weights AS (
 """
 
 
-# applicationId -> the one persisted weights DataFrame: the four
-# micromesh queries share ONE cached build EXPLICITLY instead of each
-# issuing a fresh persist() and relying on Spark's CacheManager to
-# deduplicate byte-identical plans — repeat constructions used to
-# stack never-unpersisted cache entries (review r10)
-_WEIGHTS_MEMO: dict = {}
-
-
 def _weights_df(spark: SparkSession) -> DataFrame:
-    # persisted: the static compute-once table (SURVEY P6); repeat
-    # invocations of the micromesh queries reuse one weights build
-    key = spark.sparkContext.applicationId
-    hit = _WEIGHTS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
-    ).persist()
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
-
-    evict_foreign_app_entries(_WEIGHTS_MEMO, key)
-    _WEIGHTS_MEMO[key] = w
-    return w
+    # persisted: the static compute-once table (SURVEY P6); the four
+    # micromesh queries share ONE cached build through the session
+    # memo (the micromesh reads no files, hence no scope)
+    return memo.get(
+        spark, "domain.micromesh_weights", None,
+        lambda: build_weights(
+            mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark),
+            mm.BIN_SIZE,
+        ).persist(),
+    )
 
 
 def micromesh_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adcirctime2cogs_spark import memo
 from adcirctime2cogs_spark.plans.grid import GridSpec, raster_cells
 
 
@@ -68,30 +69,19 @@ def synth_grid(grid_n: int) -> GridSpec:
     )
 
 
-# (applicationId, n, grid_n, bin_size) -> the one persisted weights
-# build for those parameters — same explicit-sharing stance as
-# domain_queries._weights_df (review r10: each invocation persisted a
-# fresh copy and relied on CacheManager plan-matching for reuse)
-_W_MEMO: dict = {}
-
-
 def _synth_weights(spark: SparkSession, n: int, grid_n: int,
                    bin_size: float) -> DataFrame:
+    """The one persisted weights build per parameter set, shared
+    through the session memo (the synthetic mesh reads no files)."""
     from adcirctime2cogs_spark.plans.weights import build_weights
 
-    key = (spark.sparkContext.applicationId, n, grid_n, bin_size)
-    hit = _W_MEMO.get(key)
-    if hit is not None:
-        return hit
-    cells = raster_cells(spark, synth_grid(grid_n))
-    w = build_weights(
-        cells, synth_nodes(spark, n), synth_elements(spark, n), bin_size
-    ).persist()
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
-
-    evict_foreign_app_entries(_W_MEMO, key[0])
-    _W_MEMO[key] = w
-    return w
+    return memo.get(
+        spark, f"synthetic.weights:{n}:{grid_n}:{bin_size}", None,
+        lambda: build_weights(
+            raster_cells(spark, synth_grid(grid_n)),
+            synth_nodes(spark, n), synth_elements(spark, n), bin_size,
+        ).persist(),
+    )
 
 
 def synth_regrid(

@@ -14,6 +14,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_half_memory() -> str:
+    """Half the host's MemTotal, the default driver heap. In local mode
+    the driver JVM hosts every executor thread; the other half is left
+    to the Python workers and the OS. Spark's own default (1g) where
+    /proc/meminfo is absent."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "1g"
+
+
 def get_spark(
     app_name: str = "adcirctime2cogs_spark",
     master: str | None = None,
@@ -45,7 +60,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_half_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # INT96 (the legacy default) carries no min/max statistics, so

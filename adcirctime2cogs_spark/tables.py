@@ -312,21 +312,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def evict_foreign_app_entries(memo: dict, app_id: str) -> None:
-    """Drop memo entries recorded by OTHER Spark applications. The
-    applicationId-keyed persist/layout memos (_WEIGHTS_MEMO, _W_MEMO,
-    _INC_LAYOUT_MEMO) never hit for a stopped application again, so a
-    long-lived driver process that cycles sessions would accumulate
-    dead DataFrame references and paths indefinitely (ADVICE r10).
-    Callers invoke this on every insert under the single-active-
-    application assumption; keys are an applicationId string or a
-    tuple whose first element is one."""
-    for k in list(memo):
-        kid = k if isinstance(k, str) else k[0]
-        if kid != app_id:
-            del memo[k]
-
-
 def _src_hash(sf_dir: str) -> str:
     import hashlib
 
@@ -336,7 +321,7 @@ def _src_hash(sf_dir: str) -> str:
 def layout_once(spark: SparkSession, sf_dir: str, name: str,
                 write_fn, code_ver: str = "") -> str:
     """Write-if-absent derived table layout, keyed on the fixture's
-    content version (registry._data_version) AND the caller's
+    content version (memo.data_version) AND the caller's
     code_ver: the layout lands once per (sf_dir, data version, code
     version) in a version-stamped warehouse dir and every later
     invocation — and every other session sharing the warehouse —
@@ -359,7 +344,7 @@ def layout_once(spark: SparkSession, sf_dir: str, name: str,
     import shutil
     import uuid
 
-    from adcirctime2cogs_spark.registry import _data_version
+    from adcirctime2cogs_spark.memo import data_version
 
     # two-part tag: <sf_dir hash>-<version hash>. The stale sweep
     # below must only reap SUPERSEDED VERSIONS OF THE SAME SOURCE DIR —
@@ -368,7 +353,7 @@ def layout_once(spark: SparkSession, sf_dir: str, name: str,
     # sharing the layout name
     src = _src_hash(sf_dir)
     ver = hashlib.md5(
-        f"{_data_version(sf_dir)}:{code_ver}".encode()
+        f"{data_version(sf_dir)}:{code_ver}".encode()
     ).hexdigest()[:8]
     tag = f"{src}-{ver}"
     raw_wh = spark.conf.get("spark.sql.warehouse.dir")

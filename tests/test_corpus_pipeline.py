@@ -155,6 +155,36 @@ def test_pipeline_is_deterministic(spark, pipe_run):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def _cached_plan_count(spark) -> int:
+    """Plans held by the session's CacheManager (its private
+    `cachedData`, read by reflection: no public API counts them)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_repeat_runs_leave_no_persisted_artifacts(spark, tmp_path):
+    """Every run checkpoints under a fresh work_dir, so the artifacts
+    its stage kernels persist (fuzzy dedup's shingle tables, sizes,
+    component edges) can never be hit again: two default-stage runs in
+    one session must leave the CacheManager as they found it."""
+    input_dir = tmp_path / "input"
+    spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).write.parquet(
+        str(input_dir / "documents.parquet")
+    )
+    before = _cached_plan_count(spark)
+    after = []
+    for run in ("a", "b"):
+        run_corpus_pipeline(spark, {
+            "input_dir": str(input_dir),
+            "work_dir": str(tmp_path / run / "work"),
+            "out_dir": str(tmp_path / run / "out"),
+        })
+        after.append(_cached_plan_count(spark))
+    assert after == [before, before]
+
+
 def test_pipeline_all_stages_off_is_passthrough(spark, tmp_path):
     cfg = {
         "input_dir": SF_DIR,

@@ -502,24 +502,22 @@ def test_hash_kernels_degenerate_inputs():
     assert np.allclose(resize_area(np.ones((1, 1)), 4, 4), 1.0)
 
 
-def test_evict_fingerprints_releases_memo(spark, sf_dir):
-    """ADVICE r12: fingerprint tables for ephemeral corpora need an
-    explicit eviction API (mirror of dedup.evict_shingle_artifacts) —
-    the automatic supersession only fires on a same-dir re-request."""
+def test_evict_fingerprints_releases_memo(spark, tmp_path):
+    """ADVICE r12: fingerprint tables for ephemeral corpora must be
+    releasable explicitly — the automatic supersession only fires on a
+    same-dir re-request. memo.clear on the corpus dir unpersists and
+    drops them."""
     from pyspark.sql import functions as F
 
-    app = spark.sparkContext.applicationId
+    from adcirctime2cogs_spark import memo
+
+    corpus = str(tmp_path)
     df = mm._fingerprints_once(
-        spark, sf_dir, "evict_test",
+        spark, corpus, "evict_test",
         lambda: spark.range(5).select(F.col("id").alias("doc_id")),
     )
-    key = next(
-        k for k in mm._FP_MEMO
-        if k[0] == app and k[1] == sf_dir and k[2] == "evict_test"
-    )
-    assert mm._FP_MEMO[key][1] is df and df.storageLevel.useMemory
-    mm.evict_fingerprints(spark, sf_dir)
-    assert not any(
-        k for k in mm._FP_MEMO if k[0] == app and k[1] == sf_dir
-    )
+    key = ("multimodal.fingerprints:evict_test", corpus)
+    assert memo._SESSION_MEMO[key][2] is df and df.storageLevel.useMemory
+    memo.clear(spark, corpus)
+    assert not any(k for k in memo._SESSION_MEMO if k[1] == corpus)
     assert not df.storageLevel.useMemory

@@ -323,8 +323,14 @@ def test_aqe_splits_skewed_join_partition(spark):
     manual half): AQE must detect a hot key's oversized partition at
     runtime and split it — SortMergeJoin(skew=true) in the final
     adaptive plan. Thresholds are lowered to make fixture-scale skew
-    visible; production keeps the defaults."""
+    visible; production keeps the defaults. The shuffle width is
+    pinned too: the hot key's partition (450k copies of one key)
+    compresses to a few times the size of an ordinary one, so it
+    clears skewedPartitionFactor (5x the median partition) only when
+    the other 50k rows spread over enough partitions — measured at
+    local[4]: 4 or 8 partitions stay under 5x, 32 clear it."""
     tuned = {
+        "spark.sql.shuffle.partitions": "32",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",

@@ -5,7 +5,7 @@ opt-out for self-invalidating queries)."""
 import os
 import shutil
 
-from adcirctime2cogs_spark import registry
+from adcirctime2cogs_spark import memo, registry
 
 
 # Window entries DELIBERATELY without a SQL oracle (the driver records
@@ -57,10 +57,12 @@ def test_plan_cache_hits_and_data_eviction(spark, sf_dir, tmp_path):
     os.utime(probe)  # "now" strictly exceeds the fixture's max mtime
     c = fn(spark, local)
     assert c is not a
-    # and the superseded entry was evicted, not leaked
-    keys = [k for k in registry._PLAN_CACHE if k[0] == "scalar_math"
-            and k[2] == local]
+    # and the superseded entry was replaced, not leaked
+    keys = [k for k in memo._SESSION_MEMO if k[0] == "plan:scalar_math"
+            and k[1] == local]
     assert len(keys) == 1
+    _app, ver, value = memo._SESSION_MEMO[keys[0]]
+    assert ver == memo.data_version(local) and value is c
 
 
 def test_plan_cache_exempts_self_invalidating_queries(spark, sf_dir):

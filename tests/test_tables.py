@@ -122,23 +122,27 @@ def test_scan_split_estimate_parity_across_confs(spark, tmp_path):
             spark.conf.set(k, v)
 
 
-def test_memo_eviction_drops_foreign_applications():
-    """ADVICE r10: the applicationId-keyed persist/layout memos must
-    not accumulate entries for stopped applications in a long-lived
-    driver that cycles sessions. evict_foreign_app_entries handles
-    both key shapes (bare appId string, appId-first tuple)."""
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
+def test_memo_eviction_drops_foreign_applications(monkeypatch):
+    """ADVICE r10: the session memo must not accumulate entries for
+    stopped applications in a long-lived driver that cycles sessions.
+    A miss drops every entry other applications recorded, scoped
+    (layout paths, persisted frames) or not (the synthetic weights);
+    this application's entries stay."""
+    from types import SimpleNamespace
 
-    memo = {
-        "app-dead-1": "w1",
-        ("app-dead-2", "/base"): ("m", "p"),
-        ("app-live", 100, 10, 0.5): "w2",
-        "app-live": "w3",
+    from adcirctime2cogs_spark import memo
+
+    store = {
+        ("w", None): ("app-dead-1", -1, "w1"),
+        ("layout", "/base"): ("app-dead-2", -1, ("m", "p")),
+        ("w:100:10:0.5", None): ("app-live", -1, "w2"),
     }
-    evict_foreign_app_entries(memo, "app-live")
-    assert memo == {
-        ("app-live", 100, 10, 0.5): "w2",
-        "app-live": "w3",
+    monkeypatch.setattr(memo, "_SESSION_MEMO", store)
+    live = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-live"))
+    assert memo.get(live, "w", None, lambda: "w3") == "w3"
+    assert store == {
+        ("w:100:10:0.5", None): ("app-live", -1, "w2"),
+        ("w", None): ("app-live", -1, "w3"),
     }
 
 

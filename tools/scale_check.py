@@ -363,12 +363,11 @@ def run_incremental_dedup_leg(spark, n_docs: int) -> dict:
             "violations": violations,
         }
     finally:
-        from adcirctime2cogs_spark.operators.dedup import (
-            evict_shingle_artifacts,
-        )
+        from adcirctime2cogs_spark import memo
         from adcirctime2cogs_spark.tables import drop_layouts
 
-        evict_shingle_artifacts(spark, union_dir)
+        memo.clear(spark, union_dir)
+        memo.clear(spark, base_dir)
         drop_layouts(spark, base_dir)
         shutil.rmtree(root, ignore_errors=True)
 
@@ -667,7 +666,6 @@ def run_prefix_filter_leg(spark, n_docs: int = 250_000) -> dict:
         _stop_filtered_shingles,
         dedup_ngram_jaccard,
         dedup_prefix_jaccard,
-        evict_shingle_artifacts,
     )
 
     root = tempfile.mkdtemp(prefix="scale_prefix_")
@@ -727,7 +725,9 @@ def run_prefix_filter_leg(spark, n_docs: int = 250_000) -> dict:
             "violations": violations,
         }
     finally:
-        evict_shingle_artifacts(spark, root)
+        from adcirctime2cogs_spark import memo
+
+        memo.clear(spark, root)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -1506,11 +1506,9 @@ def run_nb_classifier_leg(spark, n_docs: int = 1_000_000) -> dict:
             "violations": 0 if (stats.n == n_docs and acc >= 0.95) else 1,
         }
     finally:
-        from adcirctime2cogs_spark.operators.textstats import (
-            evict_nb_artifacts,
-        )
+        from adcirctime2cogs_spark import memo
 
-        evict_nb_artifacts(spark, out)
+        memo.clear(spark, out)
         shutil.rmtree(out, ignore_errors=True)
 
 
