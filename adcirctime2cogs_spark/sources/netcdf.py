@@ -5,12 +5,17 @@ Spark has no built-in NetCDF source; the adapter follows SURVEY §7's
 two paths:
 
 1. `scan_netcdf_distributed` — spark.read.format('binaryFile') over the
-   .nc files + mapInPandas decoding each file's per-timestep slices
-   into long rows (one input split per timestep mirrors the reference's
-   chunks={'time': 1}, adcirc_dask_utilities.py:42);
+   .nc files + mapInArrow decoding each file's per-timestep slices
+   into long rows, one task per file; `scan_netcdf_split` is its
+   large-file twin: byte-range splits (the reference's
+   chunks={'time': 1}, adcirc_dask_utilities.py:42) packed into about
+   one decode task per core;
 2. `netcdf_to_parquet` — one-shot driver-side conversion into the
    ts-partitioned parquet layout of sources/mesh.py, the engine-native
    path for repeated querying.
+
+Both scans build each timestep's rows as one Arrow batch straight from
+numpy (`_split_batch`).
 
 Decoding is self-contained for BOTH NetCDF flavors: fort.* files are
 classic NetCDF-3, which sources/netcdf3.py reads with struct+numpy
@@ -29,15 +34,46 @@ custom codecs remain injectable.
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import math
 import os
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 # columns the reference drops at scan (adcirc_dask_utilities.py:42)
 DROP_VARIABLES = ("neta", "nvel")
 TIMESERIES_OUT_SCHEMA = "ts timestamp, node_id long, value double"
+_TS_ARROW = pa.timestamp("us", tz="UTC")
+
+
+def _split_batch(ts, node_ids, values) -> pa.RecordBatch:
+    """One timestep's decoded (ts, node_ids, values) -> one Arrow batch
+    of TIMESERIES_OUT_SCHEMA, built from numpy with no per-row Python
+    objects. `ts` may be a pd.Timestamp or np.datetime64 (UTC);
+    `node_ids` a range or any int sequence; `values` any float
+    sequence. NaN (and None) values become SQL null: regrid's dry-cell
+    mask counts non-null values, so a NaN left as NaN would publish
+    NaN cells."""
+    if isinstance(node_ids, range):
+        ids = np.arange(
+            node_ids.start, node_ids.stop, node_ids.step, dtype="int64"
+        )
+    else:
+        ids = np.asarray(node_ids, dtype="int64")
+    stamp = pd.Timestamp(ts).to_datetime64()
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.full(len(ids), stamp, "datetime64[us]"), _TS_ARROW),
+            pa.array(ids),
+            pa.array(np.asarray(values, dtype="float64"), from_pandas=True),
+        ],
+        names=["ts", "node_id", "value"],
+    )
 
 
 def _default_decoder(path: str, content: bytes, variable: str):
@@ -98,31 +134,26 @@ def scan_netcdf_distributed(
     variable: str,
     decoder: Callable = _default_decoder,
 ) -> DataFrame:
-    """Distributed NetCDF scan: binaryFile source -> mapInPandas decode
+    """Distributed NetCDF scan: binaryFile source -> mapInArrow decode
     -> long (ts, node_id, value) rows.
 
     Each .nc file is one task (files are the parallel unit; within a
-    file the decoder emits one batch per timestep so downstream
-    repartition('ts') fans out cleanly). Column pruning == the decoder
-    only materializing `variable` (SURVEY P3).
+    file the decoder emits one batch per timestep). Column pruning ==
+    the decoder only materializing `variable` (SURVEY P3).
     """
     binf = spark.read.format("binaryFile").load(path_glob)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for path, content in zip(
+                batch.column("path").to_pylist(),
+                batch.column("content").to_pylist(),
+            ):
                 times, node_ids, values = decoder(path, content, variable)
-                node_list = list(node_ids)
                 for t_idx, t in enumerate(times):
-                    yield pd.DataFrame(
-                        {
-                            "ts": pd.Series([t] * len(node_list)),
-                            "node_id": node_list,
-                            "value": values[t_idx],
-                        }
-                    )
+                    yield _split_batch(t, node_ids, values[t_idx])
 
-    return binf.select("path", "content").mapInPandas(
+    return binf.select("path", "content").mapInArrow(
         decode, schema=TIMESERIES_OUT_SCHEMA
     )
 
@@ -168,9 +199,6 @@ def _default_range_decoder(path: str, variable: str, t_idx: int, offset: int, nb
         return hdf5.nc4_range_decoder(path, variable, t_idx, offset, nbytes)
 
 
-SPLIT_SCHEMA = "path string, t_idx int, offset long, nbytes long"
-
-
 def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     """Invoke a splitter with (path, length, variable) when its
     signature accepts a third positional arg, else (path, length) —
@@ -195,6 +223,19 @@ def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     return splitter(path, length)
 
 
+def _pack_splits(specs: list, n: int) -> list[list]:
+    """Cut `specs` (each ending in its nbytes) into `n` non-empty
+    contiguous runs balanced by bytes: run k ends at the first split
+    whose running byte total reaches k/n of the total, clamped so every
+    run keeps at least one split."""
+    cum = list(itertools.accumulate(spec[-1] for spec in specs))
+    cuts = [0]
+    for k in range(1, n):
+        cut = bisect.bisect_left(cum, cum[-1] * k / n) + 1
+        cuts.append(min(max(cut, cuts[-1] + 1), len(specs) - (n - k)))
+    return [specs[a:b] for a, b in zip(cuts, [*cuts[1:], len(specs)])]
+
+
 def scan_netcdf_split(
     spark: SparkSession,
     path_glob: str,
@@ -202,27 +243,42 @@ def scan_netcdf_split(
     splitter: Callable = _default_splitter,
     range_decoder: Callable = _default_range_decoder,
 ) -> DataFrame:
-    """Large-file NetCDF scan: per-(file, timestep) byte-range tasks.
+    """Large-file NetCDF scan: byte-range splits, packed into core-sized
+    decode tasks.
 
     `scan_netcdf_distributed` puts one whole file in one task — fine for
     many small files, but the reference's production input is ONE
     multi-GB fort.63.nc (SURVEY D2): one file = one task = zero
-    parallelism and an OOM risk. This path mirrors the reference's
-    chunks={'time': 1} (adcirc_dask_utilities.py:42):
+    parallelism and an OOM risk. This path plans the reference's
+    chunks={'time': 1} (adcirc_dask_utilities.py:42) as splits:
 
     1. list files (metadata only — the binaryFile `content` column is
        pruned, only path/length are read);
     2. plan splits driver-side with `splitter(path, length)` — a
        header-only read per file, the same metadata-on-driver split
-       planning Spark's own FileSourceScanExec does;
-    3. one task per split; each task opens its file and reads ONLY its
-       byte range via `range_decoder`.
+       planning Spark's own FileSourceScanExec does. Large records
+       further sub-split (classic node-range chunks, NetCDF-4
+       per-chunk splits), so even a ONE-file/ONE-record input
+       parallelizes;
+    3. pack the splits, in plan order, into n contiguous runs balanced
+       by bytes, with Spark's own sizing inputs:
+       n = max(min(splits, defaultParallelism),
+               ceil(split bytes / spark.sql.files.maxPartitionBytes)),
+       never more than the split count;
+    4. one task per run (`spark.range(n)` with n slices, so no shuffle
+       and no pickled RDD); the task opens each file itself, reads ONLY
+       its splits' byte ranges via `range_decoder`, and emits one Arrow
+       batch per split.
 
-    So an F-file x T-timestep input becomes at least F*T parallel
-    tasks — and large records further sub-split (classic node-range
-    chunks, NetCDF-4 per-chunk splits), so even a ONE-file/ONE-record
-    input parallelizes. No task ever materializes whole-file content.
+    Every Python task pays a fixed start-up cost (~0.3 s measured on
+    4 cores), so tasks are sized by cores and bytes, not one per split.
+    A ts-partitioned write needs no shuffle: each task writes one file
+    per ts it holds, and contiguous runs give a ts to one task unless
+    its record's splits straddle a run boundary. No task ever
+    materializes whole-file content.
     """
+    from adcirctime2cogs_spark.tables import _size_conf
+
     files = (
         spark.read.format("binaryFile")
         .load(path_glob)
@@ -236,41 +292,27 @@ def scan_netcdf_split(
             splitter, f.path, int(f.length), variable
         )
     ]
-    # COLUMN-LESS repartition = round-robin — but each SOURCE
-    # partition starts its round-robin at an independent random
-    # offset, so with multiple input partitions targets collide and
-    # some tasks decode two ranges while others idle (ADVICE r10; the
-    # prior hash partitioning was worse still, ~1/e empty). Parallelize
-    # the (driver-built, tiny) spec list into ONE source partition so
-    # the repartition is a single round-robin pass: exactly one split
-    # per task, guaranteed, at any split count. NOTE a .coalesce(1)
-    # between createDataFrame and repartition does NOT achieve this —
-    # CollapseRepartition deletes it (verified on the optimized plan);
-    # the single partition must exist at the source.
-    splits = spark.createDataFrame(
-        spark.sparkContext.parallelize(specs, 1) if specs
-        else spark.sparkContext.emptyRDD(),
-        SPLIT_SCHEMA,
-    ).repartition(max(len(specs), 1))
+    max_bytes = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    n = min(
+        len(specs),
+        max(
+            spark.sparkContext.defaultParallelism,
+            math.ceil(sum(spec[-1] for spec in specs) / max_bytes),
+        ),
+    )
+    groups = _pack_splits(specs, n)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, t_idx, offset, nbytes in zip(
-                pdf["path"], pdf["t_idx"], pdf["offset"], pdf["nbytes"]
-            ):
-                ts, node_ids, values = range_decoder(
-                    path, variable, int(t_idx), int(offset), int(nbytes)
-                )
-                node_list = list(node_ids)
-                yield pd.DataFrame(
-                    {
-                        "ts": pd.Series([ts] * len(node_list)),
-                        "node_id": node_list,
-                        "value": values,
-                    }
-                )
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for task in batch.column("id").to_pylist():
+                for path, t_idx, offset, nbytes in groups[task]:
+                    yield _split_batch(
+                        *range_decoder(path, variable, t_idx, offset, nbytes)
+                    )
 
-    return splits.mapInPandas(decode, schema=TIMESERIES_OUT_SCHEMA)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(
+        decode, schema=TIMESERIES_OUT_SCHEMA
+    )
 
 
 def netcdf_to_parquet(
@@ -297,17 +339,15 @@ def adcirc_nc_to_tables(
     """One ADCIRC fort.*.nc -> the COMPLETE engine-native table set
     (sources/mesh.py layout): mesh_nodes / mesh_elements from the
     static grid variables, plus {variable}.parquet (record variable,
-    decoded distributed) or node_maxes.parquet (time-less max field).
+    decoded by scan_netcdf_split) or node_maxes.parquet (time-less max
+    field).
 
     This is the reference-parity ingest: extract_url_grid +
     get_adcirc_slice (run/utilities/adcirc_dask_utilities.py:15-33)
     read the same x/y/depth/element/zeta variables. Mesh arrays are
     materialized driver-side like the reference's grid dict (an HSOFS
     mesh is ~50 MB — metadata next to the fact table); the fact decode
-    is the per-timestep distributed scan with the default (classic
-    NetCDF-3) codecs."""
-    import numpy as np
-    import pyarrow as pa
+    is the byte-range split scan with the default codecs."""
     import pyarrow.parquet as pq
 
     from adcirctime2cogs_spark.sources import hdf5, netcdf3
@@ -364,10 +404,11 @@ def adcirc_nc_to_tables(
     if is_record:
         # same ts-partitioned layout as netcdf_to_parquet: the O5
         # time-slice pruning story depends on it (a flat directory
-        # would scan every row group for any ts filter)
-        long_df = scan_netcdf_split(spark, nc_path, variable)
+        # would scan every row group for any ts filter). Each decode
+        # task holds whole records grouped by ts already, so no
+        # shuffle: a record within one split lands in one file.
         (
-            long_df.repartition("ts")
+            scan_netcdf_split(spark, nc_path, variable)
             .write.mode("overwrite")
             .partitionBy("ts")
             .parquet(os.path.join(out_dir, f"{variable}.parquet"))

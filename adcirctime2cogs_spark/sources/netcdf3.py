@@ -471,10 +471,11 @@ def decode_adcirc(path: str, content: bytes, variable: str):
     return times, range(values.shape[-1]), values
 
 
-# decode tasks are CPU-light (frombuffer + mask), so smaller splits
-# win on parallelism long before scheduling overhead bites: an HSOFS
-# record (14.6 MB) planned at 4 MB = 4 tasks/record — measured 2.1-3.4s
-# vs 14s unsplit for a 2-record file on local[32]
+# the packing granularity of scan_netcdf_split, not its task count:
+# splits are packed into about one decode task per core (each Python
+# task costs ~0.3 s to start), so this cap only bounds how evenly a
+# few large records spread over those tasks — an HSOFS record
+# (14.6 MB) planned at 4 MB = 4 splits/record
 MAX_SPLIT_BYTES = 4 * 1024 * 1024
 
 

@@ -1,9 +1,9 @@
 """ADCIRC NetCDF as a native Spark 4 Python DataSource.
 
 `scan_netcdf_split` (netcdf.py) composes the per-timestep byte-range
-scan out of binaryFile + mapInPandas; this module packages the same
-plan as a first-class `spark.read.format("adcirc_netcdf")` source
-(PySpark 4's DataSource API), so the scan participates in Spark's
+scan out of spark.range + mapInArrow over driver-packed splits; this
+module packages the same splits as a first-class
+`spark.read.format("adcirc_netcdf")` source (PySpark 4's DataSource API), so the scan participates in Spark's
 source machinery directly: one InputPartition per (file, timestep)
 byte-range split, Arrow RecordBatch output, schema declared up front.
 

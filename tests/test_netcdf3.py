@@ -462,19 +462,132 @@ def test_classic_subsplit_large_records(spark, tmp_path):
         assert (va is None and vb is None) or va == vb or \
             (va != va and vb != vb)
 
-    # layout guarantee (ADVICE r10): exactly one split per task — the
-    # splits frame is coalesced to ONE partition before the
-    # round-robin repartition, so targets can't collide across source
-    # partitions and no task idles while another decodes two ranges.
-    # mapInPandas is narrow, so the output's partition ids are the
-    # split tasks' ids: every split occupies its own partition.
+    # packing contract: splits fill core-sized tasks as contiguous runs
+    first_off = {}
+    for t, off, _ in splits:
+        first_off.setdefault(t, off)
+    owner = {}
+    for j, (t, off, nb) in enumerate(splits):
+        node0 = (off - first_off[t]) // 8
+        for nid in range(node0, node0 + nb // 8):
+            owner[(t, nid)] = j
+    t_of = {mm.T1: 0, mm.T2: 1, mm.T3: 2}
+    assert_packed_splits(
+        spark, split,
+        lambda r: owner[(t_of[str(r.ts)], r.node_id)],
+        [nb for _, _, nb in splits], [nb // 8 for _, _, nb in splits],
+    )
+
+
+def assert_packed_splits(spark, df, split_of, split_bytes, split_rows):
+    """scan_netcdf_split's task layout: exactly
+    n = min(S, max(min(S, defaultParallelism),
+                   ceil(sum(split_bytes) / maxPartitionBytes)))
+    partitions for S planned splits, none empty; every split decoded
+    exactly once (split_rows[j] rows, all in one partition); each
+    partition's splits one contiguous run of the plan, in partition
+    order. `split_of` maps an output row to its split's plan index."""
+    import math
+    from collections import Counter, defaultdict
+
     from pyspark.sql import functions as F
 
-    per_part = (
-        split.groupBy(F.spark_partition_id().alias("pid"))
-        .count().collect()
+    from adcirctime2cogs_spark.tables import _size_conf
+
+    n_splits = len(split_bytes)
+    max_bytes = _size_conf(
+        spark, "spark.sql.files.maxPartitionBytes", 128 << 20
     )
-    assert len(per_part) == len(splits)
+    want = min(n_splits, max(
+        min(n_splits, spark.sparkContext.defaultParallelism),
+        math.ceil(sum(split_bytes) / max_bytes),
+    ))
+    assert df.rdd.getNumPartitions() == want
+    rows = df.withColumn("pid", F.spark_partition_id()).collect()
+    counts = Counter(split_of(r) for r in rows)
+    assert counts == Counter(dict(enumerate(split_rows)))
+    pids = defaultdict(set)
+    for r in rows:
+        pids[split_of(r)].add(r.pid)
+    assert all(len(p) == 1 for p in pids.values())
+    run_of = [min(pids[j]) for j in range(n_splits)]
+    assert run_of == sorted(run_of)  # contiguous runs, in order
+    assert set(run_of) == set(range(want))  # no empty partition
+
+
+@pytest.fixture(params=["classic", "nc4"])
+def micromesh_nc(request, tmp_path):
+    """The micromesh fort.63 as classic CDF-1 or as NetCDF-4; every
+    record fits one split in both."""
+    p = str(tmp_path / "fort.63.nc")
+    if request.param == "classic":
+        _write_micromesh_nc(p)
+    else:
+        from tests.test_hdf5 import _write_micromesh_nc4
+
+        _write_micromesh_nc4(p)
+    return p
+
+
+def test_scan_split_plan_has_no_exchange(spark, micromesh_nc):
+    """The split scan reaches its decode tasks without a shuffle: the
+    executed plan is Range -> MapInArrow, no Exchange."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_split
+
+    df = scan_netcdf_split(spark, micromesh_nc, "zeta")
+    assert len(df.collect()) == len(mm.TIMESERIES)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan
+
+
+def test_nc_to_tables_stages_distributed_rows_dry_as_null(
+    spark, micromesh_nc, tmp_path
+):
+    """adcirc_nc_to_tables stages exactly the whole-file scan's rows,
+    and the dry node arrives as SQL null, never NaN (regrid's dry-cell
+    mask counts non-null values)."""
+    from pyspark.sql import functions as F
+
+    from adcirctime2cogs_spark.sources.netcdf import (
+        adcirc_nc_to_tables,
+        scan_netcdf_distributed,
+    )
+
+    out = str(tmp_path / "tables")
+    adcirc_nc_to_tables(spark, micromesh_nc, out, "zeta")
+    staged = spark.read.parquet(f"{out}/zeta.parquet").select(
+        "ts", "node_id", "value"
+    )
+    whole = scan_netcdf_distributed(spark, micromesh_nc, "zeta")
+    assert staged.count() == len(mm.TIMESERIES)
+    assert staged.exceptAll(whole).count() == 0
+    assert whole.exceptAll(staged).count() == 0
+    assert staged.where(F.isnan("value")).count() == 0
+    nulls = {
+        (str(r.ts), r.node_id)
+        for r in staged.where(F.col("value").isNull()).collect()
+    }
+    assert nulls == {(mm.T2, 3)}
+
+
+def test_nc_to_tables_one_file_per_ts(spark, micromesh_nc, tmp_path):
+    """With every record inside one split, each ts= directory of the
+    staged table holds exactly one parquet file."""
+    import os
+
+    from adcirctime2cogs_spark.sources.netcdf import adcirc_nc_to_tables
+
+    out = str(tmp_path / "tables")
+    adcirc_nc_to_tables(spark, micromesh_nc, out, "zeta")
+    table = os.path.join(out, "zeta.parquet")
+    ts_dirs = sorted(d for d in os.listdir(table) if d.startswith("ts="))
+    assert len(ts_dirs) == 3
+    for d in ts_dirs:
+        files = [
+            f for f in os.listdir(os.path.join(table, d))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (d, files)
 
 
 def test_cdf5_dimids_are_64bit_per_spec(tmp_path):

@@ -765,10 +765,11 @@ def run_nc4_ingest_leg(
     written once as classic CDF-1 and once as HDF5/NetCDF-4 (record
     var chunked (1, node_chunk), deflate — ceil(1.8225M/200k)=10
     chunks per timestep, so the split scan plans n_ts*10 byte-range
-    tasks from the v1 B-tree). Green = both formats ingest through
-    scan_netcdf_split to IDENTICAL aggregate checksums. This is the
-    pure-Python HDF5 codec's scale proof: multi-chunk deflate decode
-    of a 1.8M-node record variable, distributed."""
+    splits from the v1 B-tree, packed into core-sized tasks). Green =
+    both formats ingest through scan_netcdf_split to IDENTICAL
+    aggregate checksums. This is the pure-Python HDF5 codec's scale
+    proof: multi-chunk deflate decode of a 1.8M-node record variable,
+    distributed."""
     import shutil
     import tempfile
 
@@ -955,7 +956,7 @@ def run_production_e2e_leg(
         )
         t_nc = time.time() - t0
 
-        # ---- distributed ingest (per-record byte-range tasks) --------
+        # ---- distributed ingest (byte-range splits, per-core tasks) ---
         t0 = time.time()
         tables = f"{work}/tables"
         adcirc_nc_to_tables(spark, nc_path, tables, "zeta")
